@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from labs_stream_processing_examples_scala_spark import oracles as O
 from labs_stream_processing_examples_scala_spark.functions import errors as E
 from labs_stream_processing_examples_scala_spark.functions import text as TX
+from labs_stream_processing_examples_scala_spark.functions import transforms as X
 from labs_stream_processing_examples_scala_spark.multimodal import columns as MM
 from labs_stream_processing_examples_scala_spark.operators import bpe as BP
 from labs_stream_processing_examples_scala_spark.operators import corpus as CP
@@ -137,10 +138,7 @@ def _p1_reverse_upper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _p2_charsort(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _messages(spark, sf_dir)
-    return m.select(
-        "id",
-        F.concat_ws("", F.array_sort(F.split("value", ""))).alias("charsorted"),
-    )
+    return m.select("id", X.char_sort("value").alias("charsorted"))
 
 
 def _p3_enrich_full(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,7 +7,8 @@ is documented as broken — README.md:53). The Spark-native form is an
 ``err`` struct column: null on success, ``(cls, msg, origin)`` on failure.
 Catalyst's lazy ``when`` evaluation gives the short-circuit ("downstream
 steps skip failed records", E3) for free, and the main/DLQ split (F2) is
-two filters off one cached plan.
+two filters off one cached micro-batch, whose two writes the sink runs
+concurrently.
 
 Chaos (R7): the reference injects random failures (20% fail, 50% of those
 temporary — Services.scala:16-23,100-121). For oracle-checkable tests the

@@ -12,9 +12,15 @@ projection evaluate in one pass with zero shuffles.
 Parity notes:
 - P3 char-sort (Services.scala:56-59, Scala ``value.sorted``): Spark 4's
   ``split(v, '')`` yields exactly one element per character (no trailing
-  empty), and ``array_sort`` orders strings by UTF-8 code point — matches
-  Scala ``sorted`` on the ASCII fixture payloads. Verified equal to
-  DuckDB ``list_sort(string_split(v, ''))``.
+  empty, never a NULL element), and ``sort_array`` orders strings by
+  UTF-8 binary order, i.e. by code point — matches Scala ``sorted`` on
+  the ASCII fixture payloads. Verified equal to DuckDB
+  ``list_sort(string_split(v, ''))``. ``sort_array``, not ``array_sort``:
+  Spark plans ``array_sort`` with a lambda comparator, which has no
+  generated code and would force the whole enclosing projection into
+  interpreted evaluation; ``sort_array`` keeps it in whole-stage codegen.
+  The two differ only in where NULL elements go, and ``split`` yields
+  none.
 """
 
 from __future__ import annotations
@@ -50,7 +56,7 @@ def char_sort(value: Column | str) -> Column:
     the result in ``Widget(name)``; the engine keeps the flat string and
     offers :func:`as_widget` for struct parity.
     """
-    return F.concat_ws("", F.array_sort(F.split(_col(value), "")))
+    return F.concat_ws("", F.sort_array(F.split(_col(value), "")))
 
 
 def as_widget(sorted_value: Column | str) -> Column:

@@ -281,7 +281,7 @@ def bpe_segment(
     joined = words.join(F.broadcast(dict_df), "w")
     agg = joined.groupBy("doc_id").agg(
         F.sum("n_syms").cast("int").alias("n_bpe_tokens"),
-        F.array_sort(
+        F.sort_array(
             F.collect_list(
                 F.when(F.col("pos") < 8, F.struct("pos", "syms"))
             )

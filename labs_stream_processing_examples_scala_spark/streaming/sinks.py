@@ -15,7 +15,10 @@ here by :class:`RecordSink`'s contract and exercised in tests.
 K3 (dead-letter): failed rows (F2 split) go to a second parquet sink,
 and — matching "DLQ'd and then ACKed", ErrorHandlingRx….scala:60-63 —
 the DLQ write happens inside the SAME foreachBatch, so the batch commits
-(acks) only after both main and DLQ writes succeed.
+(acks) only after both main and DLQ writes succeed. The two writes run
+concurrently, as two Spark jobs over one persisted batch: the source is
+read once (the jobs share the cached blocks), and a core one job leaves
+idle runs the other's tasks.
 
 K4 (null sink): ``format("noop")`` (also bench.py's materializer).
 """
@@ -24,7 +27,9 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,16 +60,21 @@ def main_and_dlq_sink(
 
     Per micro-batch: ok rows → main table, err rows (flattened) → DLQ,
     both idempotent, both wrapped in R3 retry for transient write
-    failures. Offsets commit only after this function returns — the
-    ack-after-processing guarantee (README.md:13). A permanent write
-    error raises and stops the query rather than dropping data.
+    failures. The two retried writes run at the same time on two
+    threads that inherit the batch's local properties (job group, tags),
+    so cancelling the query cancels both jobs; ``on_write`` may
+    therefore be called concurrently for one batch's two paths. The
+    sink waits for both writes even when one fails, then re-raises the
+    main write's error first, else the DLQ write's. Offsets commit only
+    after this function returns — the ack-after-processing guarantee
+    (README.md:13). A permanent write error raises and stops the query
+    rather than dropping data.
     """
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         df = df.persist()
         try:
             ok, bad = split_ok_err(df, err_col)
-            with_retry(lambda: on_write(ok, output_path, batch_id), times=retry_times)
             # flatten the err fields INCLUDING origin when the struct
             # carries it: origin records WHICH enrichment step failed —
             # the datum merge_errors' first-error-wins precedence
@@ -79,7 +89,18 @@ def main_and_dlq_sink(
             if "origin" in err_fields:
                 dlq = dlq.withColumn("err_origin", F.col(f"{err_col}.origin"))
             dlq = dlq.drop(err_col)
-            with_retry(lambda: on_write(dlq, dlq_path, batch_id), times=retry_times)
+
+            def retried_write(out: DataFrame, path: str) -> None:
+                with_retry(lambda: on_write(out, path, batch_id), times=retry_times)
+
+            # wrapped before either write starts: the wrapper captures
+            # this thread's local properties (job group) and tags then
+            write = inheritable_thread_target(df.sparkSession)(retried_write)
+            # leaving the block waits for both writes, failed or not
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                done = [pool.submit(write, ok, output_path), pool.submit(write, dlq, dlq_path)]
+            for d in done:
+                d.result()
         finally:
             df.unpersist()
 

@@ -84,9 +84,9 @@ def test_funnel_plan_is_single_shuffle(spark):
             )
         )
     )
-    import re
+    from tools.plan_audit import shuffle_exchange_count
 
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
+    assert shuffle_exchange_count(plan) == 1, plan
     for node in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"):
         assert node not in plan
 
@@ -109,11 +109,14 @@ def test_dup_span_stats_single_gram_shuffle(spark):
             )
         )
     )
-    import re
+    from tools.plan_audit import shuffle_exchange_count
 
     # ≤3 exchanges total: spread (inside the persisted word-hash cache
-    # build), repartition(h), final groupBy(doc_id) — the old shape had 4
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) <= 3, plan
+    # build), repartition(h), final groupBy(doc_id) — the old shape had 4.
+    # Counted once per shuffle: a cached frame that another test already
+    # materialized prints its executed AQE plan with both the final and
+    # the initial plan, i.e. each of its Exchanges twice
+    assert shuffle_exchange_count(plan) <= 3, plan
 
 
 def test_bench_sidecar_is_cpu_qualified():

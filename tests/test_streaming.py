@@ -98,10 +98,14 @@ def test_nack_replay_after_sink_failure(spark, tmp_path):
     marker.write_text("arm")
 
     def flaky_write(df, path, batch_id):
-        if marker.exists():
+        # the sink calls on_write for main and DLQ concurrently: one
+        # atomic unlink decides which call crashes
+        try:
             marker.unlink()
+        except FileNotFoundError:
+            idempotent_write(df, path, batch_id)
+        else:
             raise ValueError("permanent-looking sink crash before commit")
-        idempotent_write(df, path, batch_id)
 
     pipe = _pipeline(tmp_path, chaos=False)
     q = pipe.start(_bounded_messages(spark), trigger_once=True, on_write=flaky_write)
@@ -114,6 +118,124 @@ def test_nack_replay_after_sink_failure(spark, tmp_path):
     assert pipe.output(spark).count() == _batch_messages(spark).count()
     # no duplicates despite redelivery
     assert pipe.output(spark).groupBy("id").count().filter("count > 1").count() == 0
+
+
+def _publish_40(qdir: str) -> None:
+    """40 messages in two fqueue segments of 20."""
+    from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
+
+    Q.publish(qdir, [(str(i), f"Input Data: {i}") for i in range(20)])
+    Q.publish(qdir, [(str(i), f"Input Data: {i}") for i in range(20, 40)])
+
+
+def _fqueue_messages(spark, qdir: str, beacons: str | None = None):
+    """The queue as one micro-batch of 10-row spans (four for
+    :func:`_publish_40`)."""
+    from labs_stream_processing_examples_scala_spark.sources import queue_source as Q
+
+    Q.register(spark)
+    reader = (
+        spark.readStream.format("fqueue")
+        .option("path", qdir)
+        .option("rows_per_batch", 100)
+        .option("rows_per_partition", 10)
+        .option("columns", "key,value")
+    )
+    if beacons is not None:
+        reader = reader.option("task_beacon_dir", beacons)
+    return reader.load().select(F.col("key").cast("long").alias("id"), F.col("value"))
+
+
+def _assert_delivered_once(spark, pipe) -> None:
+    out, dlq = pipe.output(spark), pipe.dlq(spark)
+    assert sorted(r.id for r in out.collect()) == [i for i in range(40) if i % 5]
+    assert sorted(r.id for r in dlq.collect()) == list(range(0, 40, 5))
+
+
+def test_sink_failure_waits_for_other_write_and_replays(spark, tmp_path):
+    """A permanent DLQ-write failure surfaces only after the concurrent
+    main write has finished; the batch does not commit, and a restart
+    replays it with no duplicates on either path."""
+    from labs_stream_processing_examples_scala_spark.streaming.sinks import main_and_dlq_sink
+
+    qdir = str(tmp_path / "q")
+    _publish_40(qdir)
+    pipe = _pipeline(tmp_path, chaos=True)
+    events = []
+
+    def dlq_fails(df, path, batch_id):
+        if path == pipe.dlq_path:
+            raise ValueError("permanent DLQ crash")
+        time.sleep(1.0)
+        idempotent_write(df, path, batch_id)
+        events.append("main written")
+
+    sink = main_and_dlq_sink(pipe.output_path, pipe.dlq_path, on_write=dlq_fails)
+
+    def on_batch(df, batch_id):
+        try:
+            sink(df, batch_id)
+        except Exception:
+            events.append("sink raised")
+            raise
+
+    q = (
+        pipe.transform(_fqueue_messages(spark, qdir))
+        .writeStream.option("checkpointLocation", pipe.checkpoint_path)
+        .foreachBatch(on_batch)
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="permanent DLQ crash"):
+        q.awaitTermination(120)
+    assert events == ["main written", "sink raised"]
+    assert not os.path.exists(os.path.join(pipe.checkpoint_path, "commits", "0"))
+    # restart from the same checkpoint: batch 0 replays over both paths
+    pipe.run_bounded(_fqueue_messages(spark, qdir))
+    _assert_delivered_once(spark, pipe)
+
+
+def test_sink_error_precedence_main_first(spark, tmp_path):
+    """Both writes fail: the main write's error is the one raised, after
+    both have been attempted."""
+    from labs_stream_processing_examples_scala_spark.streaming.sinks import main_and_dlq_sink
+
+    out, dlq = str(tmp_path / "out"), str(tmp_path / "dlq")
+    attempted = []
+
+    def both_fail(df, path, batch_id):  # noqa: ARG001
+        attempted.append(path)
+        raise ValueError(f"crash at {os.path.basename(path)}")
+
+    df = enrichment_with_errors(_batch_messages(spark), chaos=True)
+    with pytest.raises(ValueError, match="crash at out"):
+        main_and_dlq_sink(out, dlq, on_write=both_fail)(df, 0)
+    assert sorted(attempted) == sorted([out, dlq])
+
+
+def test_sink_writes_read_batch_once_in_query_job_group(spark, tmp_path):
+    """Main and DLQ writes run as two concurrent jobs over one persisted
+    batch: the fqueue source runs one read task per planned span, not one
+    per span per write, and both writes run in the query's job group, so
+    a cancelled query cancels both jobs."""
+    qdir, beacons = str(tmp_path / "q"), str(tmp_path / "beacons")
+    _publish_40(qdir)
+    pipe = _pipeline(tmp_path, chaos=True)
+    groups = {}
+
+    def record_group(df, path, batch_id):
+        groups[path] = df.sparkSession.sparkContext.getLocalProperty("spark.jobGroup.id")
+        idempotent_write(df, path, batch_id)
+
+    q = pipe.start(
+        _fqueue_messages(spark, qdir, beacons), trigger_once=True, on_write=record_group
+    )
+    q.awaitTermination(120)
+    assert not q.isActive and q.exception() is None, q.exception()
+    _assert_delivered_once(spark, pipe)
+    names = os.listdir(beacons)
+    assert len(names) == 4, f"4 planned spans must run 4 read tasks: {names}"
+    assert groups == {pipe.output_path: str(q.runId), pipe.dlq_path: str(q.runId)}
 
 
 def test_retry_then_succeed_with_timing(spark):

@@ -115,3 +115,29 @@ def test_error_rows_do_not_kill_query(spark):
     msgs = spark.range(0, 10).select(F.col("id"), X.synth_payload("id").alias("value"))
     total = P.enrichment_with_errors(msgs, chaos=True).count()
     assert total == 10
+
+
+def test_enrichment_projection_is_whole_stage_codegen(spark):
+    """The enrichment projection compiles in whole-stage codegen: no
+    lambda comparator (``array_sort``'s default has no generated code,
+    which would force the whole ``Project`` into interpreted evaluation), and
+    every ``Project`` sits inside a ``*(n)`` codegen stage."""
+    msgs = spark.range(0, 10).select(F.col("id"), X.synth_payload("id").alias("value"))
+    for df in (P.enrichment_with_errors(msgs, chaos=True), P.enrichment_pipeline(msgs)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in plan, plan
+        projects = [ln for ln in plan.splitlines() if "Project [" in ln]
+        assert projects, plan
+        for ln in projects:
+            assert ln.lstrip(" :+-").startswith("*("), plan
+
+
+@settings(max_examples=20, deadline=None)
+@given(st.one_of(st.none(), st.text(max_size=20)))
+def test_charsort_is_binary_order_for_any_text(spark, s):
+    """``sort_array`` orders by UTF-8 bytes — code-point order for any
+    text, astral characters included; ``concat_ws`` reads a NULL input
+    as an empty list, so NULL sorts to the empty string."""
+    df = spark.createDataFrame([(s,)], "v string")
+    got = df.select(X.char_sort("v").alias("r")).head()[0]
+    assert got == "".join(sorted(s or ""))

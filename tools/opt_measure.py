@@ -17,7 +17,6 @@ eager builders — pagerank, ANN builds — still run their build jobs).
 from __future__ import annotations
 
 import json
-import re
 import sys
 import time
 from pathlib import Path
@@ -28,6 +27,7 @@ import __spark_entry__ as entrymod
 from labs_stream_processing_examples_scala_spark import get_spark
 
 import bench as benchmod
+from tools.plan_audit import shuffle_exchange_count
 
 
 def plan_of(df) -> str:
@@ -38,12 +38,9 @@ def plan_of(df) -> str:
     )
 
 
-_EXCHANGE = re.compile(r"^\s*[+:*\-| ]*\(\d+\) Exchange\b", re.M)
-
-
 def plan_stats(plan: str) -> dict:
     return {
-        "exchanges": len(_EXCHANGE.findall(plan)),
+        "exchanges": shuffle_exchange_count(plan),
         "smj": plan.count("SortMergeJoin"),
         "bhj": plan.count("BroadcastHashJoin"),
         "shj": plan.count("ShuffledHashJoin"),
