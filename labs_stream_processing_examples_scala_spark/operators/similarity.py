@@ -125,29 +125,28 @@ def _cos_pair_udf():
 def _cos_const_udf(qvec: list[float]):
     """Arrow-vectorized twin of ``dot(vec, lit(q)) / (norm(vec) *
     lit(norm_py(q)))`` — the :func:`_probe_index_rows` scoring shape;
-    bit-identical (same folds, same precomputed query norm)."""
+    bit-identical (same folds, same precomputed query norm). A NULL
+    vector scores NULL and a NaN score stays NaN, as in the Catalyst
+    form (a plain float Series would turn NaN into NULL on the way to
+    Arrow); a zero-norm vector raises like its ANSI DIVIDE_BY_ZERO."""
     q = np.array([float(x) for x in qvec])
     qn = _norm_py(list(qvec))
 
     @F.pandas_udf("double")
     def cos(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series(np.empty(0))
-        if vs.isna().any():
-            raise ValueError(
-                "NULL vector in cosine scoring (the Catalyst form "
-                "propagates NULL; this vectorized form requires non-null "
-                "arrays — filter them upstream)"
-            )
-        V = np.vstack(vs.to_numpy())
-        num = _seq_acc(V, q)
-        den = np.sqrt(_seq_acc(V)) * qn
-        if np.any(den == 0.0):
-            raise ValueError(
-                "[DIVIDE_BY_ZERO] zero-norm vector in cosine scoring "
-                "(matches the Catalyst form's ANSI divide-by-zero)"
-            )
-        return pd.Series(num / den)
+        null = vs.isna().to_numpy()
+        out = np.full(len(vs), np.nan)
+        if not null.all():
+            V = np.vstack(vs[~null].to_numpy())
+            num = _seq_acc(V, q)
+            den = np.sqrt(_seq_acc(V)) * qn
+            if np.any(den == 0.0):
+                raise ValueError(
+                    "[DIVIDE_BY_ZERO] zero-norm vector in cosine scoring "
+                    "(matches the Catalyst form's ANSI divide-by-zero)"
+                )
+            out[~null] = num / den
+        return pd.Series(pd.arrays.FloatingArray(out, null))
 
     return cos
 

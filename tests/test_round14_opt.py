@@ -93,15 +93,24 @@ def test_cos_scoring_udfs_match_catalyst_bitwise(spark):
     vec_pair = {r.vec_id: r.c for r in paired.select("vec_id", S._cos_pair_udf()(F.col("vec"), F.col("qvec")).alias("c")).collect()}
     assert all(math.isclose(cat[k], vec_pair[k], rel_tol=0.0, abs_tol=0.0) for k in cat)
 
+    # a NULL vector scores NULL and a NaN one NaN in both forms (the
+    # pair UDF still raises on NULL)
+    odd = {-1: F.lit(None).cast("array<double>"), -2: F.array_repeat(F.lit(float("nan")), len(qvec))}
+    with_odd = paired
+    for vid, vec in odd.items():
+        with_odd = with_odd.unionByName(q.select(F.lit(vid).cast("long").alias("vec_id"), vec.alias("vec"), "qvec"))
     cat_const = {
         r.vec_id: r.c
-        for r in paired.select(
+        for r in with_odd.select(
             "vec_id",
             (S.dot(F.col("vec"), F.array(*[F.lit(x) for x in qvec]))
              / (S.norm(F.col("vec")) * F.lit(S._norm_py(qvec)))).alias("c"),
         ).collect()
     }
-    vec_const = {r.vec_id: r.c for r in paired.select("vec_id", S._cos_const_udf(qvec)(F.col("vec")).alias("c")).collect()}
+    vec_const = {r.vec_id: r.c for r in with_odd.select("vec_id", S._cos_const_udf(qvec)(F.col("vec")).alias("c")).collect()}
+    assert cat_const.keys() == vec_const.keys()
+    assert cat_const.pop(-1) is None and vec_const.pop(-1) is None
+    assert math.isnan(cat_const.pop(-2)) and math.isnan(vec_const.pop(-2))
     assert all(math.isclose(cat_const[k], vec_const[k], rel_tol=0.0, abs_tol=0.0) for k in cat_const)
 
 
